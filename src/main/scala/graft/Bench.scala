@@ -7,8 +7,9 @@ import org.apache.spark.sql.SparkSession
   * `{"metric":"total","value":N,"unit":"sec",...}` as the last stdout
   * line (the driver captures only a 4 KB stdout tail — BENCH_r05 lost
   * its total to front-truncation of one long line); the full per-query
-  * median/min maps are written to `target/bench_detail.json` and
-  * mirrored to stderr. The driver runs this per-round at sf0.1 →
+  * median/min maps are written to `target/bench_detail_c{cpus}.json`
+  * (one file per core count, so a c8 run never overwrites the c32
+  * record) and mirrored to stderr. The driver runs this per-round at sf0.1 →
   * BENCH_r{N}.json.
   *
   * Methodology (round-2 fixes per VERDICT "What's wrong" #2/#3):
@@ -211,11 +212,11 @@ object Bench {
     val preRun = s"""{"load_avg_1m":$preLoad,"cached_mb":$preCachedMb,"available_mb":$preAvailMb}"""
     val detail =
       s"""{"metric":"total","value":$total,"unit":"sec","min_total":$minTotal,"min_total_norm":${j3(minTotalNorm)},"min_total_norm_io":${j3(minTotalNormIo)},"queries":$qs,"queries_min":$qsMin,"queries_min_norm":$qsMinNorm,"queries_min_norm_io":$qsMinNormIo,"passes":$passes,"errors":$errors,"load_avg_1m":$load,"pre_run":$preRun,"calibration":$calArr,"calibration_end":$calEndArr,"calibration_pass":$calPassArr,"calibration_io":$calIoArr,"calibration_io_end":$calIoEndArr,"calibration_io_pass":$calIoPassArr,"calibration_min":$calMin,"cpus":$cpus,"sf":"$sfDir"}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("target/bench_detail.json"), detail)
+    val detailPath = s"target/bench_detail_c$cpus.json"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(detailPath), detail)
     System.err.println(detail)
     val headline =
-      s"""{"metric":"total","value":$total,"unit":"sec","min_total":$minTotal,"min_total_norm":${j3(minTotalNorm)},"min_total_norm_io":${j3(minTotalNormIo)},"n_queries":${results.size},"passes":$passes,"errors":$errors,"load_avg_1m":$load,"calibration_min":$calMin,"cpus":$cpus,"sf":"$sfDir","detail":"target/bench_detail.json"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","min_total":$minTotal,"min_total_norm":${j3(minTotalNorm)},"min_total_norm_io":${j3(minTotalNormIo)},"n_queries":${results.size},"passes":$passes,"errors":$errors,"load_avg_1m":$load,"calibration_min":$calMin,"cpus":$cpus,"sf":"$sfDir","detail":"$detailPath"}"""
     // The driver's stdout capture has mis-parsed the headline for four
     // rounds (sbt's "[info] " prefix + tail clipping — PERF_r14..r17 all
     // record parsed: null), so the SAME one-line total JSON also lands in

@@ -527,8 +527,8 @@ class StandingIndex(
   private def dropSegment(table: String): Unit = {
     // in the common publish path the table does NOT exist (fresh segment
     // name) — the in-memory existence probe is ~5x cheaper than parsing
-    // and executing a no-op DROP statement (SegmentProbe), and publishes
-    // run once per fold
+    // and executing a no-op DROP statement (measured in a same-JVM A/B),
+    // and publishes run once per fold
     if (spark.catalog.tableExists(table)) spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = new org.apache.hadoop.fs.Path(
       warehouse, table.toLowerCase(java.util.Locale.ROOT))

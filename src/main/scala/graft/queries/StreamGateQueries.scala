@@ -449,7 +449,7 @@ object StreamGateQueries {
   }
 
   /** The shared one-file-per-slice writer behind [[sliceByKey]] and
-    * [[stageDocHashSplit]]: `src` must carry an int `_slice` column in
+    * [[stageHashSplit]]: `src` must carry an int `_slice` column in
     * 1..n; each slice lands as exactly one parquet file, named and
     * modification-stamped ascending so `FileStreamSource` +
     * `maxFilesPerTrigger=1` delivers slice i as micro-batch i−1. An
@@ -493,21 +493,43 @@ object StreamGateQueries {
     stagedDirs.add(staged)
   }
 
-  /** Stage q73's INCOMING document batch (the content-hash uniform split
-    * `u < 0.3` — [[graft.operators.Sampling]], reshard/retry-stable) as
-    * `n` doc_id-ordered files, one per micro-batch: the arriving-batch
-    * trickle for the streaming ingest-admission gate (q84). Only
-    * (doc_id, text) is staged — fingerprints are computed IN the stream,
-    * map-side, which is where an ingest pipeline computes them.
+  /** q73's INCOMING document batch: the content-hash uniform split
+    * `u < 0.3` ([[graft.operators.Sampling]], reshard/retry-stable).
+    * Only (doc_id, text) is staged — fingerprints and shingles are
+    * computed IN the stream, map-side, where an ingest pipeline
+    * computes them.
+    */
+  private def incomingDocs(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .filter(graft.operators.Sampling.uniform01(col("doc_id")) < 0.3)
+      .select("doc_id", "text")
+
+  /** The staged (doc_id, text) schema of [[incomingDocs]]. */
+  private val docFields =
+    Seq(StructField("doc_id", LongType), StructField("text", StringType))
+
+  /** The exact-modality key: q73's bag fingerprint of normalized text. */
+  private def fingerprint(text: Column): Column =
+    graft.operators.TextOps.bagFingerprint(graft.operators.TextOps.normText(text))
+
+  /** The corpus side of q73's split (`u >= 0.3`) as exact fingerprints:
+    * the standing index every exact-fingerprint streaming gate probes.
+    */
+  private def corpusFingerprints(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir)
+      .select(fingerprint(col("text")).as("fingerprint"),
+        graft.operators.Sampling.uniform01(col("doc_id")).as("u"))
+      .filter(col("u") >= 0.3)
+      .select("fingerprint")
+
+  /** Stage [[incomingDocs]] as `n` doc_id-ordered files, one per
+    * micro-batch: the arriving-batch trickle for the streaming
+    * ingest-admission gate (q84) and the never-expiring exact folds.
     */
   private def stageDocSplit(
       s: SparkSession, dir: String, tag: String, n: Int = 4): String = {
-    import s.implicits._
     val staged = Files.createTempDirectory(s"graft-$tag-src")
-    val src = Tables.documents(s, dir)
-      .filter(graft.operators.Sampling.uniform01($"doc_id") < 0.3)
-      .select($"doc_id", $"text")
-      .withColumn("_k", $"doc_id".cast("double"))
+    val src = incomingDocs(s, dir).withColumn("_k", col("doc_id").cast("double"))
     sliceByKey(staged, tag, src, n, filePrefix = "docs")
     staged.toString
   }
@@ -526,39 +548,33 @@ object StreamGateQueries {
       graft.operators.Sampling.hash60(
         concat(lit("t"), id.cast("string"))) % (WmJitterMax + 1))
 
-  /** Stage the incoming documents (the content-hash split `u < 0.3`) as
-    * `n` HASH-GROUP files — doc → micro-batch `hash60('g' || doc_id) % n`
-    * — for the streamed NEAR-dup fold gates (q96/q97). Unlike
-    * [[stageDocSplit]]'s quantile slicing (whose `approxQuantile` cuts
-    * no SQL engine reproduces), the hash assignment is itself
-    * oracle-expressible, which the near-dup gates REQUIRE: the fuzzy
-    * fold recurrence is batch-layout-dependent (q91's scaladoc), so its
-    * oracle must pin the exact layout. The salt `'g'` decorrelates the
-    * batch assignment from the `u` corpus split (different md5 input).
+  /** Stage `incoming` (`id` plus raw payload columns) as `n`
+    * HASH-GROUP files — row → micro-batch `hash60('g' || id) % n` — for
+    * the layout-pinned fold gates. Unlike [[stageDocSplit]]'s quantile
+    * slicing (whose `approxQuantile` cuts no SQL engine reproduces), the
+    * hash assignment is itself oracle-expressible, which the near-dup
+    * and vector gates REQUIRE: their fold recurrence is
+    * batch-layout-dependent (q91's scaladoc; pairwise cosine is as
+    * non-transitive as Jaccard), so the oracle must pin the exact
+    * layout. The salt `'g'` decorrelates the batch assignment from the
+    * `u` corpus split (different md5 input).
     */
-  private def stageDocHashSplit(
-      s: SparkSession, dir: String, tag: String, n: Int,
+  private def stageHashSplit(
+      s: SparkSession, tag: String, n: Int, incoming: DataFrame, id: String,
       eventTs: Boolean = false, allowEmpty: Boolean = false): String = {
-    import s.implicits._
     val staged = Files.createTempDirectory(s"graft-$tag-src")
     val scratch = Files.createTempDirectory(s"graft-$tag-part")
-    val grp = graft.operators.Sampling.hash60(
-      concat(lit("g"), $"doc_id".cast("string"))) % n
-    val base = Tables.documents(s, dir)
-      .filter(graft.operators.Sampling.uniform01($"doc_id") < 0.3)
-      .select($"doc_id", $"text")
-      .withColumn("_slice", (grp + 1).cast("int"))
-    // eventTs (q108): a REAL event-time column, deterministic per doc —
+    val grp = graft.operators.Sampling.hash60(concat(lit("g"), col(id).cast("string"))) % n
+    val base = incoming.withColumn("_slice", (grp + 1).cast("int"))
+    // eventTs (q108): a REAL event-time column, deterministic per row —
     // batch k's events live in [T0 + (k−1)·step, T0 + (k−1)·step + jmax]
     // (a content-hash jitter inside each batch, so max-event and
     // watermark values are data-derived, not degenerate constants). The
     // jitter is strictly inside the step (step > 2·jmax), which is what
     // makes the watermark-window arithmetic batch-exact — see
     // [[q108WatermarkExpiringFold]]'s window law.
-    val src = if (!eventTs) base
-      else base.withColumn("event_ts", wmEventTs($"doc_id"))
-    writeSlices(staged, scratch, src, n, filePrefix = "docs",
-      allowEmpty = allowEmpty)
+    val src = if (!eventTs) base else base.withColumn("event_ts", wmEventTs(col(id)))
+    writeSlices(staged, scratch, src, n, filePrefix = "slice", allowEmpty = allowEmpty)
     staged.toString
   }
 
@@ -570,6 +586,11 @@ object StreamGateQueries {
       .schema(eventsSchema)
       .option("maxFilesPerTrigger", "1")
       .parquet(staged)
+
+  /** The stateful operators the query's last progress reports. */
+  private def stateOpNames(query: StreamingQuery): Seq[String] =
+    Option(query.lastProgress)
+      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
 
   /** A multi-batch gate must actually exercise cross-batch state: require
     * ≥ 3 micro-batches WITH INPUT ROWS in the executed query's progress
@@ -839,8 +860,7 @@ object StreamGateQueries {
       .format("parquet")
       .start(out)
     query.awaitTermination()
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
+    val stateful = stateOpNames(query)
     require(stateful.size == 2,
       s"q60 must execute two chained stateful operators, got $stateful")
     requireMultiBatch(query, "q60")
@@ -920,8 +940,7 @@ object StreamGateQueries {
       .format("parquet")
       .start(out)
     query.awaitTermination()
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
+    val stateful = stateOpNames(query)
     require(stateful.size == 3,
       s"q63 must execute three chained stateful operators, got $stateful")
     requireMultiBatch(query, "q63")
@@ -1254,8 +1273,7 @@ object StreamGateQueries {
       .format("parquet")
       .start(out)
     query.awaitTermination()
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
+    val stateful = stateOpNames(query)
     require(stateful.size == 2,
       s"q67 must execute two chained stateful operators, got $stateful")
     requireMultiBatch(query, "q67")
@@ -1381,25 +1399,6 @@ object StreamGateQueries {
         $"events".as("n_events"))
   }
 
-  /** Shared run1/run2 drive loop for every crash-and-replay gate.
-    * `failAt = None` drives one clean run to termination and requires
-    * ≥ 3 data micro-batches. `failAt = Some(_)` requires run 1 to
-    * terminate with the injected mid-batch failure (the cause chain
-    * must carry `injectedMsg` and the driver-side `failMarker` must
-    * exist — proof the injection actually fired rather than the stream
-    * dying for an unrelated reason), then restarts against the same
-    * checkpoint and requires the replay to cover multiple batches
-    * (the replayed batch plus the undelivered files). Returns the
-    * final (clean or replayed) query so callers can inspect
-    * `lastProgress` for their stateful-operator contracts.
-    */
-  private def driveRuns(
-      tag: String, failAt: Option[Long], injectedMsg: String,
-      failMarker: java.nio.file.Path)(
-      runOnce: String => StreamingQuery): StreamingQuery =
-    driveCrashSchedule(tag,
-      failAt.toSeq.map(_ => (injectedMsg, failMarker)))(runOnce)
-
   /** The ONE per-batch cadence-policy probe shared by every
     * policy-composed gate (q111/q113/q114/q119–q123): fire
     * `compactIfOver` bounded to committed covers, count the firing for
@@ -1419,16 +1418,20 @@ object StreamGateQueries {
   }
 
   /** The ONE crash-schedule drive loop behind every fault-injection
-    * gate — the single-crash gates through [[driveRuns]] and the soak
-    * gate's multi-crash schedule directly — so the injection
+    * gate — the single-crash gates and the soak gate's multi-crash
+    * schedule alike — so the injection
     * verification discipline (cause-chain walk, injected-message
     * matching, marker checks, restart accounting) can never drift per
     * gate. `injected` is one (message, marker) pair per scheduled
     * crash: each run must either terminate CLEAN (ending the drive) or
     * die with ONE of the scheduled injections; the drive requires
-    * exactly `injected.size` restarts, every marker fired, and the
-    * final run multi-batch (the replayed batch plus the undelivered
-    * files). An empty schedule is the clean single-run drive.
+    * exactly `injected.size` restarts, every marker fired (proof the
+    * injection actually fired rather than the stream dying for an
+    * unrelated reason), and the final run multi-batch (the replayed
+    * batch plus the undelivered files). An empty schedule is the clean
+    * single-run drive. Returns the final (clean or replayed) query so
+    * callers can inspect `lastProgress` for their stateful-operator
+    * contracts.
     */
   private def driveCrashSchedule(
       tag: String, injected: Seq[(String, java.nio.file.Path)])(
@@ -1511,9 +1514,8 @@ object StreamGateQueries {
         }
         .start()
     }
-    val run2 = driveRuns(tag, Some(failAt), injectedMsg, failMarker)(runOnce)
-    val stateful = Option(run2.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
+    val run2 = driveCrashSchedule(tag, Seq((injectedMsg, failMarker)))(runOnce)
+    val stateful = stateOpNames(run2)
     require(stateful.size == statefulOps,
       s"$tag replay must restore $statefulOps stateful operator(s), got $stateful")
     dropStaged(staged)
@@ -1888,26 +1890,17 @@ object StreamGateQueries {
     // the crash variant stages 6 files so the replay run still covers
     // ≥ 3 data micro-batches (replayed batch 2 + files 3-5), q70's layout
     val staged = stageDocSplit(s, dir, tag, n = if (failAt.isDefined) 6 else 4)
-    val corpus = Tables.documents(s, dir)
-      .select(
-        graft.operators.TextOps.bagFingerprint(
-          graft.operators.TextOps.normText($"text")).as("fingerprint"),
-        graft.operators.Sampling.uniform01($"doc_id").as("u"))
-      .filter($"u" >= 0.3)
-      .select($"fingerprint")
+    val corpus = corpusFingerprints(s, dir)
     val out = Files.createTempDirectory(s"graft-$tag-out").toString
     val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
     val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
     val failMarker = Paths.get(out, "_fail_injected")
     def runOnce(run: String): StreamingQuery = {
       val incoming = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
+        .schema(StructType(docFields))
         .option("maxFilesPerTrigger", "1")
         .parquet(staged)
-        .select($"doc_id",
-          graft.operators.TextOps.bagFingerprint(
-            graft.operators.TextOps.normText($"text")).as("fingerprint"))
+        .select($"doc_id", fingerprint($"text").as("fingerprint"))
       incoming
         .join(corpus, Seq("fingerprint"), "left_anti")
         .groupBy($"fingerprint")
@@ -1928,9 +1921,8 @@ object StreamGateQueries {
         }
         .start()
     }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
+    val query = driveCrashSchedule(tag, failAt.toSeq.map(_ => (injectedMsg, failMarker)))(runOnce)
+    val stateful = stateOpNames(query)
     require(stateful.size == 1,
       s"$tag must run ONE stateful operator (the admission agg; the " +
         s"stream-static probe is stateless), got $stateful")
@@ -1987,7 +1979,7 @@ object StreamGateQueries {
     * count is bounded by compaction off the ingest path.
     */
   def q91StreamingFold(s: SparkSession, dir: String): DataFrame =
-    streamingFoldGate(s, dir, "q91", failAt = None)
+    foldGate(s, dir, "q91", FoldModality.Exact, ExpiryClock.Never, failAt = None)
 
   /** q92 — the mid-batch crash at the INDEX-FOLD shape: q91's pipeline
     * with the sink's first attempt of data batch 2 dying AFTER both its
@@ -2004,7 +1996,7 @@ object StreamGateQueries {
     * batch-dir union must meet q91's oracle verbatim.
     */
   def q92MidBatchFailureFold(s: SparkSession, dir: String): DataFrame =
-    streamingFoldGate(s, dir, "q92", failAt = Some(2L))
+    foldGate(s, dir, "q92", FoldModality.Exact, ExpiryClock.Never, failAt = Some(2L))
 
   /** q94 — COMPACTION DURING CONTINUOUS INGEST: q91's streaming fold
     * pipeline with a compaction injected at the head of batch 2 —
@@ -2032,7 +2024,8 @@ object StreamGateQueries {
     * fails the hash.
     */
   def q94CompactedStreamingFold(s: SparkSession, dir: String): DataFrame =
-    streamingFoldGate(s, dir, "q94", failAt = None, compactAt = Some(1L))
+    foldGate(s, dir, "q94", FoldModality.Exact, ExpiryClock.Never, failAt = None,
+      compactAt = Some(1L))
 
   /** q95 — q94's mid-stream compaction COMPOSED with q92's mid-batch
     * crash: batch 2's first attempt compacts (bounded, covers ≤ 2),
@@ -2048,7 +2041,8 @@ object StreamGateQueries {
     * verbatim.
     */
   def q95CompactedFoldCrash(s: SparkSession, dir: String): DataFrame =
-    streamingFoldGate(s, dir, "q95", failAt = Some(2L), compactAt = Some(1L))
+    foldGate(s, dir, "q95", FoldModality.Exact, ExpiryClock.Never, failAt = Some(2L),
+      compactAt = Some(1L))
 
   /** q111 — the COMPACTION-CADENCE POLICY as code: q91's continuous fold
     * loop over a LONG horizon (10 micro-batches) where compaction fires
@@ -2066,77 +2060,275 @@ object StreamGateQueries {
     * crash anywhere replays it idempotently (q95's law).
     */
   def q111PolicyCompactedFold(s: SparkSession, dir: String): DataFrame =
-    streamingFoldGate(s, dir, "q111", failAt = None,
-      autoCompactOver = Some(4), nOverride = Some(10))
+    foldGate(s, dir, "q111", FoldModality.Exact, ExpiryClock.Never, failAt = None,
+      autoCompactOver = Some(4), batches = Some(10))
 
-  /** Shared harness behind q91/q92 (clean/crashed), q94/q95 (with a
-    * harness-scheduled mid-stream compaction), and q111 (policy-driven
-    * compaction cadence + long horizon) — one implementation of the
-    * probe, sink, fold, compact, and read-back. See q91's scaladoc for
-    * semantics, q70's for the injection contract, q94's for the
-    * coverage argument, q111's for the cadence-policy contract.
+  /** When a fold gate's index entries stop blocking. Both expiring
+    * clocks run the SAME [[ExpiryHorizon]]-batch recurrence (the window
+    * law makes the watermark clock batch-exact), so they share oracles
+    * and fences.
     */
-  private def streamingFoldGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long],
+  private[graft] sealed trait ExpiryClock
+  private[graft] object ExpiryClock {
+    /** Folds block forever (q91/q96/q100). */
+    case object Never extends ExpiryClock
+    /** Folds stamped with their batch position; expire at `batchId − H` (q98). */
+    case object BatchPosition extends ExpiryClock
+    /** Folds stamped with the batch's max event time; expire at
+      * `committedWatermark − horizonMs` from the recorded planning
+      * watermark (q108).
+      */
+    case object Watermark extends ExpiryClock
+  }
+
+  /** One gate run's modality state: the staged source dir, the corpus
+    * index's `init` frame, the per-batch `(batch, ix, batchId, stampMs)
+    * => admitted` call, and the non-vacuity fences over the read-back.
+    */
+  private[graft] final case class FoldRun(
+      staged: String, corpus: DataFrame,
+      admit: (DataFrame, graft.operators.StandingIndex, Long, Long) => DataFrame,
+      fence: DataFrame => Unit)
+
+  /** What a fold gate admits and indexes. `name` is the index and query
+    * name infix; the sink writes `(idCol, batch, payload)` per batch and
+    * the gate reads back [[outCols]]. `fields` is the staged schema
+    * without the watermark clock's `event_ts`.
+    */
+  private[graft] sealed abstract class FoldModality(
+      val name: String, val keys: Seq[String], val idCol: String,
+      val payload: String, val fields: Seq[StructField]) {
+    def outCols(clock: ExpiryClock): Seq[String] = Seq(idCol, "batch", payload)
+    def open(s: SparkSession, dir: String, tag: String, n: Int, clock: ExpiryClock): FoldRun
+  }
+
+  private[graft] object FoldModality {
+    /** Exact bag fingerprints ([[LlmQueries.admitAndFold]]). The
+      * never-expiring shape uses doc_id-ordered [[stageDocSplit]] and
+      * q73's `(doc_id, fingerprint)` columns: its oracle relies on
+      * doc_id-ordered batches (q91's scaladoc).
+      */
+    case object Exact extends FoldModality(
+        "fp", Seq("fingerprint"), "doc_id", "fingerprint", docFields) {
+      override def outCols(clock: ExpiryClock): Seq[String] =
+        if (clock == ExpiryClock.Never) Seq("doc_id", "fingerprint") else super.outCols(clock)
+      def open(s: SparkSession, dir: String, tag: String, n: Int, clock: ExpiryClock): FoldRun = {
+        import s.implicits._
+        val staged =
+          if (clock == ExpiryClock.Never) stageDocSplit(s, dir, tag, n)
+          else stageHashSplit(s, tag, n, incomingDocs(s, dir), "doc_id",
+            eventTs = clock == ExpiryClock.Watermark)
+        val corpus = corpusFingerprints(s, dir)
+        FoldRun(staged, corpus,
+          admit = (batch, ix, batchId, stampMs) => LlmQueries.admitAndFold(
+            batch.select($"doc_id", fingerprint($"text").as("fingerprint")),
+            ix, batchId, maxEventMs = stampMs),
+          fence = result => if (clock != ExpiryClock.Never) {
+            // expiry must have RE-OPENED at least one corpus-blocked
+            // fingerprint (an admission the never-expiring gate would
+            // reject) — otherwise the gate silently collapses into q91
+            val reopened = result.join(corpus, "fingerprint").count()
+            require(reopened > 0,
+              s"$tag must admit at least one post-expiry corpus duplicate, got none")
+          })
+      }
+    }
+
+    /** Near-dup band keys ([[LlmQueries.neardupAdmitAndFold]]); the
+      * exact-Jaccard confirm reads blocker shingles from the full
+      * document store by id (at 100 TB the q53 bucket-pruned point
+      * lookup; here one checkpointed frame).
+      */
+    case object NearDup extends FoldModality(
+        "band", Seq("band", "bk"), "doc_id", "n_shingles", docFields) {
+      def open(s: SparkSession, dir: String, tag: String, n: Int, clock: ExpiryClock): FoldRun = {
+        import s.implicits._
+        val staged = stageHashSplit(s, tag, n, incomingDocs(s, dir), "doc_id",
+          eventTs = clock == ExpiryClock.Watermark)
+        val docStoreSh = LlmQueries.shingleDocs(Tables.documents(s, dir)).localCheckpoint()
+        val corpusBands = {
+          val b = LlmQueries.minhashBands(docStoreSh
+              .filter(graft.operators.Sampling.uniform01($"doc_id") >= 0.3))
+            .select($"doc_id", $"band", $"bk")
+          // the expiring fence below re-probes against the corpus index
+          if (clock != ExpiryClock.Never) b.localCheckpoint() else b
+        }
+        FoldRun(staged, corpusBands,
+          admit = (batch, ix, batchId, stampMs) => LlmQueries.neardupAdmitAndFold(
+            batch.select($"doc_id", $"text"), ix, batchId, docStoreSh, maxEventMs = stampMs),
+          fence = result => if (clock != ExpiryClock.Never) {
+            // expiry must have RE-OPENED at least one corpus-blocked doc —
+            // a late admission with a CONFIRMED corpus near-duplicate
+            // (band-candidate + exact Jaccard >= 0.8), which the
+            // never-expiring gate would reject; otherwise the gate
+            // silently collapses into q96
+            val lateSh = docStoreSh
+              .join(result.filter($"batch" > ExpiryHorizon).select($"doc_id"), "doc_id")
+              .localCheckpoint()
+            val lateCand = LlmQueries.minhashBands(lateSh)
+              .select($"doc_id", $"band", $"bk")
+              .join(corpusBands.select($"doc_id".as("blocker"), $"band", $"bk"),
+                Seq("band", "bk"))
+              .select($"doc_id", $"blocker").distinct()
+            val reopened = lateCand
+              .join(lateSh.select($"doc_id", $"sh".as("sh_i")), "doc_id")
+              .join(docStoreSh.select($"doc_id".as("blocker"), $"sh".as("sh_b")), "blocker")
+              .withColumn("common", size(array_intersect($"sh_i", $"sh_b")))
+              .filter($"common".cast("double") /
+                (size($"sh_i") + size($"sh_b") - $"common") >= 0.8)
+              .select($"doc_id").distinct().count()
+            require(reopened > 0,
+              s"$tag must admit at least one post-expiry corpus near-duplicate, got none")
+          })
+      }
+    }
+
+    /** Vector sketch buckets ([[LlmQueries.vectorAdmitAndFold]]). The
+      * incoming share is 0.5, NOT q80's 0.3, deliberately: under the 0.3
+      * split the fixture has ZERO confirmed incoming–incoming pairs at
+      * sf0.001 (measured), so every fold would be inert and the gate
+      * would silently collapse into a streamed q80; at 0.5 the fold path
+      * provably bites at every SF (the fold-blocks fence below).
+      */
+    case object Vector extends FoldModality("vec", Seq("bucket"), "vec_id", "bucket",
+        Seq(StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)))) {
+      def open(s: SparkSession, dir: String, tag: String, n: Int, clock: ExpiryClock): FoldRun = {
+        import s.implicits._
+        val incoming = Tables.embeddings(s, dir)
+          .filter(graft.operators.Sampling.uniform01($"vec_id") < 0.5)
+          .select($"vec_id", $"embedding")
+        val staged = stageHashSplit(s, tag, n, incoming, "vec_id",
+          eventTs = clock == ExpiryClock.Watermark)
+        val corpusFrame = LlmQueries.vectorIndexRows(
+            LlmQueries.vectorSketch(Tables.embeddings(s, dir))
+              .filter(graft.operators.Sampling.uniform01($"vec_id") >= 0.5))
+          .localCheckpoint() // reused by the non-vacuity fences below
+        FoldRun(staged, corpusFrame,
+          admit = (batch, ix, batchId, stampMs) => LlmQueries.vectorAdmitAndFold(
+            batch.select($"vec_id", $"embedding"), ix, batchId, maxEventMs = stampMs),
+          fence = result => if (clock == ExpiryClock.Never) {
+            // at least one rejection must be attributable to a FOLD (an
+            // earlier batch's admission), not the corpus or the in-batch
+            // self-join — otherwise the gate silently collapses into a
+            // streamed q80 and proves nothing about index maintenance.
+            // The no-fold baseline replays each batch's admission
+            // against the corpus segment ALONE; strictly more admissions
+            // there means a fold blocked somebody here.
+            val grpCol = (graft.operators.Sampling.hash60(
+              concat(lit("g"), $"vec_id".cast("string"))) % n + 1).cast("int")
+            val stagedSv = LlmQueries.vectorSketch(incoming)
+              .withColumn("g", grpCol).localCheckpoint()
+            val noFold = (1 to n).map { k =>
+              LlmQueries.admitByVectorSegments(
+                stagedSv.filter($"g" === k).drop("g"), Seq(corpusFrame)).count()
+            }.sum
+            val admittedCount = result.count()
+            require(noFold > admittedCount,
+              s"$tag: folds must block at least one vector " +
+                s"(no-fold admissions $noFold vs admitted $admittedCount)")
+          } else {
+            // expiry must have RE-OPENED at least one corpus-blocked
+            // vector — an admission past the horizon whose confirmed
+            // corpus near-duplicate the never-expiring gate would have
+            // rejected; otherwise the gate silently collapses into q100
+            val lateSv = LlmQueries.vectorSketch(Tables.embeddings(s, dir))
+              .join(result.filter($"batch" > ExpiryHorizon).select($"vec_id"), "vec_id")
+            val reopened = lateSv.join(corpusFrame, "bucket")
+              .withColumn("cosine", graft.operators.VectorOps.cosineFromParts(
+                graft.operators.VectorOps.dotL($"v", $"bv"), $"nsq", $"bn"))
+              .filter($"cosine" >= 0.4)
+              .select($"vec_id").distinct().count()
+            require(reopened > 0,
+              s"$tag must admit at least one post-expiry corpus near-duplicate, got none")
+          })
+      }
+    }
+  }
+
+  /** The ONE streaming fold-gate driver (q91–q122 except q93): each
+    * micro-batch probes the standing corpus index's strictly-earlier
+    * segments, sinks its admissions to a batch-keyed dir, and folds them
+    * in as segment `batchId + 1`. See q91's scaladoc for the semantics,
+    * q70's for the injection contract, q94's for the bounded
+    * head-of-batch `compactAt`, q111's for the cadence policy
+    * `autoCompactOver`, q98's and q108's for the two expiry clocks.
+    * `batches` overrides the staged file count (6 for a crash drive,
+    * else 4 never-expiring and 5 expiring).
+    */
+  private[graft] def foldGate(
+      s: SparkSession, dir: String, tag: String,
+      modality: FoldModality, clock: ExpiryClock, failAt: Option[Long],
       compactAt: Option[Long] = None, autoCompactOver: Option[Int] = None,
-      nOverride: Option[Int] = None): DataFrame = {
-    import s.implicits._
-    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
-    val staged = stageDocSplit(s, dir, tag,
-      n = nOverride.getOrElse(if (failAt.isDefined) 6 else 4))
-    val corpus = Tables.documents(s, dir)
-      .select(
-        graft.operators.TextOps.bagFingerprint(
-          graft.operators.TextOps.normText($"text")).as("fingerprint"),
-        graft.operators.Sampling.uniform01($"doc_id").as("u"))
-      .filter($"u" >= 0.3)
-      .select($"fingerprint")
+      batches: Option[Int] = None): DataFrame = {
+    import ExpiryClock._
+    val wmClock = clock == Watermark
+    if (wmClock) requireWmWindowLaw(tag)
+    val n = batches.getOrElse(if (failAt.isDefined) 6 else if (clock == Never) 4 else 5)
+    val run = modality.open(s, dir, tag, n, clock)
     val ix = new graft.operators.StandingIndex(
-      s, s"${tag}_fp_ix", buckets = 4, keys = Seq("fingerprint"))
-    ix.init(corpus)
+      s, s"${tag}_${modality.name}_ix", buckets = 4, keys = modality.keys)
+    // expiring shapes: the corpus folded BEFORE batch 0 — stamp -1 on the
+    // batch-position clock, one full step before batch 0's events on the
+    // watermark clock — so it expires when batch H's threshold passes it
+    ix.init(run.corpus, maxEventMs = clock match {
+      case Never => Long.MaxValue
+      case BatchPosition => -1L
+      case Watermark => WmT0 - WmStepMs
+    })
     val out = Files.createTempDirectory(s"graft-$tag-out").toString
     val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
+    val qn = s"${tag}_${modality.name}_fold"
+    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sawWm = new java.util.concurrent.atomic.AtomicInteger(0)
     val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
     val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val incoming = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
+    def runOnce(attempt: String): StreamingQuery = {
+      val read = s.readStream
+        .schema(StructType(modality.fields ++
+          (if (wmClock) Seq(StructField("event_ts", TimestampType)) else Seq.empty)))
         .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .select($"doc_id",
-          graft.operators.TextOps.bagFingerprint(
-            graft.operators.TextOps.normText($"text")).as("fingerprint"))
+        .parquet(run.staged)
+      val incoming = if (!wmClock) read
+        else read.withWatermark("event_ts", s"${WmDelayMs / 1000} seconds")
       incoming
         .writeStream
-        .queryName(s"${tag}_streaming_fold_$run")
+        .queryName(s"${qn}_$attempt")
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ck)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q94/q95: the mid-stream compaction, at the head of the batch
-          // AFTER `compactAt` — i.e. strictly after batch `compactAt`'s
-          // COMMIT — and BOUNDED to committed folds (covers <= batchId).
-          // Running it inside batch `compactAt` after the sink would open
-          // a crash window (compact done, batch commit not), whose replay
-          // finds segmentsUpTo(compactAt) empty and wedges; here a crash
-          // anywhere in THIS batch just replays the same bounded compact
-          // idempotently, and a crashed replay fold (cover batchId + 1)
-          // can never be subsumed — Hudi's async-compaction discipline
-          // (compaction plans only committed file slices)
+          // q94: the compact at the head of the batch after `compactAt`,
+          // bounded to committed folds — q94's scaladoc shows why any
+          // other placement opens a crash window that wedges the replay
           if (compactAt.contains(batchId - 1)) ix.compact(coverAtMost = batchId)
-          // q111: the cadence POLICY decides — compact the committed
-          // prefix (covers <= batchId, q94's bounded discipline) when
-          // the live count exceeds k; the policy, not the harness, is
-          // what must keep the probe fan-out bounded
-          autoCompactOver.foreach(k =>
-            policyProbe(tag, ix, k, batchId, policyFired))
-          // probe strictly-earlier segments + keyed fold — the ONE
-          // spelling (LlmQueries.admitAndFold, shared with StreamBench's
-          // fold subject); see q92's scaladoc for the replay contract
-          val admitted = LlmQueries.admitAndFold(batch, ix, batchId)
-          admitted.select($"doc_id", $"fingerprint")
-            .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
+          // q111: the cadence POLICY compacts the committed prefix when
+          // the live count exceeds k — at the head of the batch, BEFORE
+          // the expire, so an expiring clock's mixed-stamp merge is
+          // retired entry by entry right after
+          autoCompactOver.foreach(k => policyProbe(tag, ix, k, batchId, policyFired))
+          // expiry first (q98's ordering): entries behind the horizon
+          // stop blocking BEFORE this batch probes; then the fold's stamp
+          val (src, stampMs) = clock match {
+            case Never => (batch, Some(Long.MaxValue))
+            case BatchPosition =>
+              ix.expire(expireBeforeMs = batchId - ExpiryHorizon)
+              (batch, Some(batchId))
+            case Watermark =>
+              // [[wmClockStep]]: record/read the planning watermark,
+              // expire at committedWatermark − Hms, checkpoint once,
+              // max-event stamp (None for a rowless batch)
+              wmClockStep(s, ck, qn, batchId, ix, batch,
+                onWm = wm => { if (wm > 0L) sawWm.incrementAndGet(); () })
+          }
+          // probe strictly-earlier segments + keyed fold — the modality's
+          // ONE per-batch spelling, shared with StreamBench; see q92's
+          // scaladoc for the replay contract
+          stampMs.foreach { stamp =>
+            run.admit(src, ix, batchId, stamp)
+              .select(col(modality.idCol),
+                lit(batchId + 1).cast("int").as("batch"), col(modality.payload))
+              .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
+          }
           if (failAt.contains(batchId) && !Files.exists(failMarker)) {
             Files.createFile(failMarker)
             throw new RuntimeException(injectedMsg)
@@ -2144,23 +2336,29 @@ object StreamGateQueries {
         }
         .start()
     }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
+    val query = driveCrashSchedule(tag, failAt.toSeq.map(_ => (injectedMsg, failMarker)))(runOnce)
+    val stateful = stateOpNames(query)
     require(stateful.isEmpty,
       s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state), got $stateful")
+        s"state; the watermark operator holds no store), got $stateful")
+    // a silently-absent watermark would leave every expire() a no-op and
+    // collapse the gate into the never-expiring shape (q108's fence)
+    if (wmClock) require(sawWm.get >= n - 2,
+      s"$tag: the engine must report a committed event-time watermark " +
+        s"from batch 2 on, got ${sawWm.get} reports")
     // q111's non-vacuity fence: a policy that never fired would silently
-    // degrade the gate to q91 and prove nothing about cadence
+    // degrade the gate to its policy-free twin and prove nothing
     autoCompactOver.foreach { _ =>
       require(policyFired.get >= 2,
         s"$tag: the cadence policy must fire >= 2 compactions across the " +
           s"run, got ${policyFired.get}")
     }
-    dropStaged(staged)
-    s.read.parquet(s"$out/batch_*")
-      .select($"doc_id", $"fingerprint")
-      .orderBy($"doc_id")
+    dropStaged(run.staged)
+    val result = s.read.parquet(s"$out/batch_*")
+      .select(modality.outCols(clock).map(col): _*)
+      .orderBy(col(modality.idCol))
+    run.fence(result)
+    result
   }
 
   /** q91/q92's oracle: q73's admitted set (smallest-id holder per
@@ -2197,7 +2395,7 @@ object StreamGateQueries {
     * the INDEX. The N-batch greedy recurrence has no batch-layout-FREE
     * oracle (non-transitive similarity — q91's argument stands), so the
     * gate pins the layout itself into the oracle: docs land in
-    * micro-batch `hash60('g' || doc_id) % n` ([[stageDocHashSplit]] —
+    * micro-batch `hash60('g' || doc_id) % n` ([[stageHashSplit]] —
     * deterministic, DuckDB-reproducible), and the oracle unrolls the
     * recurrence over exactly those groups
     * ([[LlmQueries.neardupSequentialOracle]]). The exact-confirm's
@@ -2210,7 +2408,7 @@ object StreamGateQueries {
     * index is the cross-batch state).
     */
   def q96StreamingNeardupFold(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q96", failAt = None)
+    foldGate(s, dir, "q96", FoldModality.NearDup, ExpiryClock.Never, failAt = None)
 
   /** q97 — q96's pipeline crashed on the first attempt of batch 2 after
     * both durable effects (admissions dir + band-key fold), then
@@ -2221,7 +2419,7 @@ object StreamGateQueries {
     * batch-dir union meets q96's oracle for the 6-batch layout verbatim.
     */
   def q97NeardupFoldCrash(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q97", failAt = Some(2L))
+    foldGate(s, dir, "q97", FoldModality.NearDup, ExpiryClock.Never, failAt = Some(2L))
 
   /** q109 — q94's MID-STREAM COMPACTION on the NEAR-DUP modality: q96's
     * continuous banded-fold loop with the bounded head-of-batch compact
@@ -2234,183 +2432,26 @@ object StreamGateQueries {
     * rows shifts some batch's candidate set and fails the hash.
     */
   def q109CompactedNeardupFold(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q109", failAt = None, compactAt = Some(1L))
-
-  /** Shared harness behind q96/q97 (never-expiring), q104/q105
-    * (`horizon = Some(H)` — per-batch expire + stamped folds + the
-    * post-expiry re-admission fence), and q109 (`compactAt` — the
-    * bounded head-of-batch mid-stream compaction), the
-    * `streamingFoldGate(compactAt)` parametrization pattern: one
-    * drive/sink/probe spelling for the whole near-dup gate family.
-    */
-  private def neardupFoldGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long],
-      horizon: Option[Long] = None, compactAt: Option[Long] = None,
-      wmClock: Boolean = false,
-      autoCompactOver: Option[Int] = None): DataFrame = {
-    import s.implicits._
-    require(!(wmClock && horizon.isDefined),
-      s"$tag: wmClock IS the expiry clock — horizon is the batch-position spelling")
-    if (wmClock) requireWmWindowLaw(tag)
-    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
-    // the two expiry clocks run the SAME horizon recurrence (the window
-    // law makes the ms clock batch-exact), so the fences and oracle of
-    // the batch-position spelling apply verbatim to the watermark one
-    val fenceHorizon = if (wmClock) Some(ExpiryHorizon) else horizon
-    val n =
-      if (failAt.isDefined) 6 else if (fenceHorizon.isDefined) 5 else 4
-    val staged = stageDocHashSplit(s, dir, tag, n, eventTs = wmClock)
-    // the confirm step's doc store: every blocker's shingles fetched by
-    // id (at 100 TB the q53 bucket-pruned point lookup; here one
-    // checkpointed frame shared by all batches)
-    val docStoreSh = LlmQueries.shingleDocs(Tables.documents(s, dir))
-      .localCheckpoint()
-    val corpusSh = docStoreSh
-      .filter(graft.operators.Sampling.uniform01($"doc_id") >= 0.3)
-    val corpusBands = {
-      val b = LlmQueries.minhashBands(corpusSh).select($"doc_id", $"band", $"bk")
-      // the expiring fence below re-probes against the corpus index
-      if (fenceHorizon.isDefined) b.localCheckpoint() else b
-    }
-    val ix = new graft.operators.StandingIndex(
-      s, s"${tag}_band_ix", buckets = 4, keys = Seq("band", "bk"))
-    // expiring shape: the corpus folded BEFORE batch 0 — stamp -1 on the
-    // batch-position clock, one full step before batch 0's events on the
-    // watermark clock — so it expires when batch H's threshold passes
-    ix.init(corpusBands, maxEventMs =
-      if (wmClock) WmT0 - WmStepMs
-      else if (horizon.isDefined) -1L
-      else Long.MaxValue)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val qn = s"${tag}_neardup_fold"
-    val sawWm = new java.util.concurrent.atomic.AtomicInteger(0)
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val fields = Seq(
-        StructField("doc_id", LongType), StructField("text", StringType)) ++
-        (if (wmClock) Seq(StructField("event_ts", TimestampType)) else Seq.empty)
-      val read = s.readStream
-        .schema(StructType(fields))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-      val incoming = if (!wmClock) read
-        else read.withWatermark("event_ts", s"${WmDelayMs / 1000} seconds")
-      incoming
-        .writeStream
-        .queryName(s"${qn}_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q109: the bounded head-of-batch compact (q94's placement
-          // discipline) — strictly after batch `compactAt`'s commit,
-          // bounded to committed folds
-          if (compactAt.contains(batchId - 1)) ix.compact(coverAtMost = batchId)
-          // q119/q120: the cadence POLICY at the head of the batch,
-          // bounded to committed covers and BEFORE the expire — q113's
-          // fully-composed loop on the NEAR-DUP modality (under the
-          // watermark clock every band fold is distinctly stamped, so a
-          // policy firing is always a mixed-stamp merge)
-          autoCompactOver.foreach(k =>
-            policyProbe(tag, ix, k, batchId, policyFired))
-          // expiry first (q98's ordering): entries behind the horizon
-          // stop blocking BEFORE this batch probes. Two spellings of
-          // the SAME threshold: the batch-position clock (q104/q105)
-          // expires at batchId − H here; the production watermark clock
-          // (q115/q116) expires inside [[wmClockStep]] below at
-          // committedWatermark − Hms, re-derived on replay from the
-          // recorded planning watermark (q112's discipline)
-          horizon.foreach(h => ix.expire(expireBeforeMs = batchId - h))
-          // wmClock: the ONE watermark-clock step ([[wmClockStep]] —
-          // checkpoint once, record/read the planning watermark, expire
-          // at committedWatermark − Hms, max-event stamp)
-          val (src, stampMs) =
-            if (wmClock) wmClockStep(s, ck, qn, batchId, ix, batch,
-              onWm = wm => { if (wm > 0L) sawWm.incrementAndGet(); () })
-            else (batch,
-              Some(if (horizon.isDefined) batchId else Long.MaxValue))
-          stampMs.foreach { stamp =>
-            // then the ONE per-batch spelling (LlmQueries
-            // .neardupAdmitAndFold, shared with StreamBench's neardup
-            // subject): shingle + band once, probe strictly-earlier
-            // surviving segments, fold the admitted band keys
-            val admitted = LlmQueries.neardupAdmitAndFold(
-              src.select($"doc_id", $"text"), ix, batchId, docStoreSh,
-              maxEventMs = stamp)
-            admitted
-              .select($"doc_id", lit(batchId + 1).cast("int").as("batch"),
-                $"n_shingles")
-              .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          }
-          if (failAt.contains(batchId) && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-        }
-        .start()
-    }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.isEmpty,
-      s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state; the watermark operator holds no store), got $stateful")
-    // the engine must actually have reported advancing watermarks — a
-    // silently-absent watermark would leave every expire() a no-op and
-    // collapse the gate into the never-expiring shape (q108's fence)
-    if (wmClock) require(sawWm.get >= n - 2,
-      s"$tag: the engine must report a committed event-time watermark " +
-        s"from batch 2 on, got ${sawWm.get} reports")
-    // q119/q120's non-vacuity fence (q111's): a policy that never fired
-    // would silently degrade the gate to q115 and prove nothing
-    autoCompactOver.foreach { _ =>
-      require(policyFired.get >= 2,
-        s"$tag: the cadence policy must fire >= 2 compactions across the " +
-          s"run, got ${policyFired.get}")
-    }
-    dropStaged(staged)
-    val result = s.read.parquet(s"$out/batch_*")
-      .select($"doc_id", $"batch", $"n_shingles")
-      .orderBy($"doc_id")
-    fenceHorizon.foreach { h =>
-      // non-vacuity fence: expiry must have RE-OPENED at least one
-      // corpus-blocked doc — a late admission with a CONFIRMED corpus
-      // near-duplicate (band-candidate + exact Jaccard >= 0.8), which
-      // the never-expiring gate would reject; otherwise the expiring
-      // gate silently collapses into q96
-      val lateSh = docStoreSh
-        .join(result.filter($"batch" > h).select($"doc_id"), "doc_id")
-        .localCheckpoint()
-      val lateCand = LlmQueries.minhashBands(lateSh)
-        .select($"doc_id", $"band", $"bk")
-        .join(corpusBands.select($"doc_id".as("blocker"), $"band", $"bk"),
-          Seq("band", "bk"))
-        .select($"doc_id", $"blocker").distinct()
-      val reopened = lateCand
-        .join(lateSh.select($"doc_id", $"sh".as("sh_i")), "doc_id")
-        .join(docStoreSh.select($"doc_id".as("blocker"), $"sh".as("sh_b")), "blocker")
-        .withColumn("common", size(array_intersect($"sh_i", $"sh_b")))
-        .filter($"common".cast("double") /
-          (size($"sh_i") + size($"sh_b") - $"common") >= 0.8)
-        .select($"doc_id").distinct().count()
-      require(reopened > 0,
-        s"$tag must admit at least one post-expiry corpus near-duplicate, got none")
-    }
-    result
-  }
+    foldGate(s, dir, "q109", FoldModality.NearDup, ExpiryClock.Never, failAt = None,
+      compactAt = Some(1L))
 
   /** q96/q97's oracle: the sequential near-dup recurrence unrolled over
     * the gate's exact hash-group batch layout (see q96's scaladoc).
     * With `horizon` set, q104/q105's expiring variant of the same
     * generator.
     */
-  private def neardupGateOracle(n: Int, horizon: Option[Long] = None): String = {
-    val u = graft.operators.Sampling.duckUniform01("CAST(doc_id AS VARCHAR)")
-    val gh = graft.operators.Sampling.duckHash60("'g' || CAST(doc_id AS VARCHAR)")
-    LlmQueries.neardupSequentialOracle(
-      s"CASE WHEN $u >= 0.3 THEN 0 ELSE 1 + ($gh % $n) END", n, horizon)
+  private def neardupGateOracle(n: Int, horizon: Option[Long] = None): String =
+    LlmQueries.neardupSequentialOracle(duckBatchGroup("doc_id", 0.3, n), n, horizon)
+
+  /** [[stageHashSplit]]'s layout as a DuckDB expression — 0 for the
+    * corpus (`u >= share`), else the 1-based micro-batch
+    * `1 + hash60('g' || id) % n` — so the layout-pinned oracles
+    * reproduce the exact batch assignment.
+    */
+  private def duckBatchGroup(id: String, share: Double, n: Int): String = {
+    val u = graft.operators.Sampling.duckUniform01(s"CAST($id AS VARCHAR)")
+    val gh = graft.operators.Sampling.duckHash60(s"'g' || CAST($id AS VARCHAR)")
+    s"CASE WHEN $u >= $share THEN 0 ELSE 1 + ($gh % $n) END"
   }
 
   /** q104 — streamed EXPIRING dedup on the NEAR-DUP modality: q98's
@@ -2431,7 +2472,7 @@ object StreamGateQueries {
     * — the SAME generator as q89/q96/q97.
     */
   def q104ExpiringNeardupFold(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q104", failAt = None, horizon = Some(ExpiryHorizon))
+    foldGate(s, dir, "q104", FoldModality.NearDup, ExpiryClock.BatchPosition, failAt = None)
 
   /** q105 — q104's pipeline crashed on the first attempt of batch 2
     * after its durable effects (expire + fold + sink), then replayed:
@@ -2440,7 +2481,7 @@ object StreamGateQueries {
     * stamped re-fold of the deterministic band keys.
     */
   def q105ExpiringNeardupCrash(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q105", failAt = Some(2L), horizon = Some(ExpiryHorizon))
+    foldGate(s, dir, "q105", FoldModality.NearDup, ExpiryClock.BatchPosition, failAt = Some(2L))
 
   /** q115 — q104's expiring NEAR-DUP fold with the expiry clock spelled
     * the way a production deployment spells it (q108's watermark clock
@@ -2461,7 +2502,7 @@ object StreamGateQueries {
     * post-expiry corpus re-admission, exactly q104's.
     */
   def q115WatermarkNeardupFold(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q115", failAt = None, wmClock = true)
+    foldGate(s, dir, "q115", FoldModality.NearDup, ExpiryClock.Watermark, failAt = None)
 
   /** q116 — q115's pipeline crashed on the first attempt of batch 2
     * after ALL durable effects (the recorded planning watermark, the
@@ -2474,7 +2515,7 @@ object StreamGateQueries {
     * band keys AND the identical max-event stamp.
     */
   def q116WatermarkNeardupCrash(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q116", failAt = Some(2L), wmClock = true)
+    foldGate(s, dir, "q116", FoldModality.NearDup, ExpiryClock.Watermark, failAt = Some(2L))
 
   /** q119 — q113's FULLY-COMPOSED PRODUCTION LOOP on the NEAR-DUP
     * modality: q115's watermark-clocked expiring band fold with
@@ -2492,7 +2533,7 @@ object StreamGateQueries {
     * re-admission.
     */
   def q119PolicyNeardupFold(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q119", failAt = None, wmClock = true,
+    foldGate(s, dir, "q119", FoldModality.NearDup, ExpiryClock.Watermark, failAt = None,
       autoCompactOver = Some(2))
 
   /** q120 — q119's pipeline crashed on the first attempt of batch 2
@@ -2506,7 +2547,7 @@ object StreamGateQueries {
     * stamped band keys. The ≥ 2-firings fence spans the whole drive.
     */
   def q120PolicyNeardupCrash(s: SparkSession, dir: String): DataFrame =
-    neardupFoldGate(s, dir, "q120", failAt = Some(2L), wmClock = true,
+    foldGate(s, dir, "q120", FoldModality.NearDup, ExpiryClock.Watermark, failAt = Some(2L),
       autoCompactOver = Some(2))
 
 
@@ -2534,7 +2575,7 @@ object StreamGateQueries {
     * is O(horizon × batch), never O(stream).
     */
   def q98ExpiringFold(s: SparkSession, dir: String): DataFrame =
-    expiringFoldGate(s, dir, "q98", failAt = None)
+    foldGate(s, dir, "q98", FoldModality.Exact, ExpiryClock.BatchPosition, failAt = None)
 
   /** q99 — q98's pipeline crashed on the first attempt of batch 2 after
     * its durable effects (expire + fold + sink), then replayed. The
@@ -2547,7 +2588,7 @@ object StreamGateQueries {
     * exactly-once matrix.
     */
   def q99ExpiringFoldCrash(s: SparkSession, dir: String): DataFrame =
-    expiringFoldGate(s, dir, "q99", failAt = Some(2L))
+    foldGate(s, dir, "q99", FoldModality.Exact, ExpiryClock.BatchPosition, failAt = Some(2L))
 
   /** Batches a fold blocks for in the expiring gates (see q98).
     * `private[graft]` so StreamBench's `foldexp` subject prices exactly
@@ -2578,7 +2619,8 @@ object StreamGateQueries {
     * — both shift admissions and fail the hash.
     */
   def q106ExpiringCompactedFold(s: SparkSession, dir: String): DataFrame =
-    expiringFoldGate(s, dir, "q106", failAt = None, compactAt = Some(1L))
+    foldGate(s, dir, "q106", FoldModality.Exact, ExpiryClock.BatchPosition, failAt = None,
+      compactAt = Some(1L))
 
   /** q107 — q106's pipeline crashed on the first attempt of batch 2
     * after ALL its durable effects (the bounded compact, the expiry
@@ -2592,93 +2634,8 @@ object StreamGateQueries {
     * expiry at once — the full maintenance stack under one failure.
     */
   def q107ExpiringCompactCrash(s: SparkSession, dir: String): DataFrame =
-    expiringFoldGate(s, dir, "q107", failAt = Some(2L), compactAt = Some(1L))
-
-  /** Shared harness behind q98/q99 (clean/crashed) and q106/q107 (with a
-    * mid-stream bounded compaction — `compactAt`, the
-    * streamingFoldGate parametrization pattern).
-    */
-  private def expiringFoldGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long],
-      compactAt: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val n = if (failAt.isDefined) 6 else 5
-    val staged = stageDocHashSplit(s, dir, tag, n)
-    val corpus = Tables.documents(s, dir)
-      .select(
-        graft.operators.TextOps.bagFingerprint(
-          graft.operators.TextOps.normText($"text")).as("fingerprint"),
-        graft.operators.Sampling.uniform01($"doc_id").as("u"))
-      .filter($"u" >= 0.3)
-      .select($"fingerprint")
-    val ix = new graft.operators.StandingIndex(
-      s, s"${tag}_fp_ix", buckets = 4, keys = Seq("fingerprint"))
-    // the corpus folded BEFORE batch 0 — stamp -1 on the batch-position
-    // clock, so it expires exactly when batch H's threshold passes it
-    ix.init(corpus, maxEventMs = -1L)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val incoming = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .select($"doc_id",
-          graft.operators.TextOps.bagFingerprint(
-            graft.operators.TextOps.normText($"text")).as("fingerprint"))
-      incoming
-        .writeStream
-        .queryName(s"${tag}_expiring_fold_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q106/q107: the bounded head-of-batch compact (q94's
-          // placement discipline), BEFORE the expire — it merges
-          // mixed-stamp committed segments into an entry-level-stamped
-          // generation, and the expire right after must still retire
-          // exactly the horizon's entries from it
-          if (compactAt.contains(batchId - 1)) ix.compact(coverAtMost = batchId)
-          // horizon next: segments (and merged-generation ENTRIES) whose
-          // stamp fell behind batchId − H stop blocking BEFORE this
-          // batch probes (retire/rewrite → next cycle reclaims); then
-          // the standard probe + stamped fold
-          ix.expire(expireBeforeMs = batchId - ExpiryHorizon)
-          val admitted = LlmQueries.admitAndFold(batch, ix, batchId,
-            maxEventMs = batchId)
-          admitted
-            .select($"doc_id", lit(batchId + 1).cast("int").as("batch"),
-              $"fingerprint")
-            .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          if (failAt.contains(batchId) && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-        }
-        .start()
-    }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.isEmpty,
-      s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state), got $stateful")
-    dropStaged(staged)
-    val result = s.read.parquet(s"$out/batch_*")
-      .select($"doc_id", $"batch", $"fingerprint")
-      .orderBy($"doc_id")
-    // non-vacuity fence: expiry must have RE-OPENED at least one
-    // corpus-blocked fingerprint (an admission that q91's never-expiring
-    // gate would reject) — otherwise this gate silently collapses into
-    // q91 and proves nothing about the horizon
-    val reopened = result.join(corpus, "fingerprint").count()
-    require(reopened > 0,
-      s"$tag must admit at least one post-expiry corpus duplicate, got none")
-    result
-  }
+    foldGate(s, dir, "q107", FoldModality.Exact, ExpiryClock.BatchPosition, failAt = Some(2L),
+      compactAt = Some(1L))
 
   /** q98/q99's oracle: per-batch admission windows unrolled over the
     * hash-group layout — batch k (1-based group) is blocked by the
@@ -2693,8 +2650,6 @@ object StreamGateQueries {
     * each window once, which is also what the recurrence MEANS.
     */
   private def expiringFoldOracle(n: Int, horizon: Long): String = {
-    val u = graft.operators.Sampling.duckUniform01("CAST(doc_id AS VARCHAR)")
-    val gh = graft.operators.Sampling.duckHash60("'g' || CAST(doc_id AS VARCHAR)")
     val admCtes = (1 to n).map { k =>
       // the shared expiry window (LlmQueries.horizonWindow) — the
       // fingerprint modality's spelling of the same blocker arms
@@ -2718,7 +2673,7 @@ object StreamGateQueries {
        |  SELECT doc_id,
        |    md5(array_to_string(list_sort(list_distinct(string_split(
        |      lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' '))), ' ')) AS fingerprint,
-       |    CASE WHEN $u >= 0.3 THEN 0 ELSE 1 + ($gh % $n) END AS g
+       |    ${duckBatchGroup("doc_id", 0.3, n)} AS g
        |  FROM documents),
        |$admCtes,
        |out AS (
@@ -2755,7 +2710,7 @@ object StreamGateQueries {
     * The gate's event-time geometry makes that ms-clock recurrence
     * BATCH-EXACT, so q98's oracle applies verbatim: batch k's events
     * live in `[T0 + k·step, T0 + k·step + J_k]` with realized jitter
-    * `J_k ≤ jmax` ([[stageDocHashSplit]] `eventTs`), so the expiry
+    * `J_k ≤ jmax` ([[stageHashSplit]] `eventTs`), so the expiry
     * threshold at batch b is `T0 + (b−2)·step + J_{b−2} − D − Hms` and a
     * fold stamped at batch j survives iff
     * `(j − b + 2)·step ≥ J_{b−2} − J_j − (D + Hms)`. With
@@ -2782,7 +2737,7 @@ object StreamGateQueries {
     * is committed state by construction.
     */
   def q108WatermarkExpiringFold(s: SparkSession, dir: String): DataFrame =
-    watermarkFoldGate(s, dir, "q108", failAt = None)
+    foldGate(s, dir, "q108", FoldModality.Exact, ExpiryClock.Watermark, failAt = None)
 
   /** q112 — q108's pipeline crashed on the first attempt of batch 2
     * after ALL its durable effects (the recorded planning watermark,
@@ -2797,7 +2752,7 @@ object StreamGateQueries {
     * oracle verbatim.
     */
   def q112WatermarkExpiryCrash(s: SparkSession, dir: String): DataFrame =
-    watermarkFoldGate(s, dir, "q112", failAt = Some(2L))
+    foldGate(s, dir, "q112", FoldModality.Exact, ExpiryClock.Watermark, failAt = Some(2L))
 
   /** q113 — the FULL PRODUCTION LOOP in one gate: q108's
     * watermark-clocked expiring fold with compaction fired by the
@@ -2821,7 +2776,8 @@ object StreamGateQueries {
     * ≥ 1 post-expiry corpus re-admission.
     */
   def q113PolicyExpiringWatermarkFold(s: SparkSession, dir: String): DataFrame =
-    watermarkFoldGate(s, dir, "q113", failAt = None, autoCompactOver = Some(2))
+    foldGate(s, dir, "q113", FoldModality.Exact, ExpiryClock.Watermark, failAt = None,
+      autoCompactOver = Some(2))
 
   /** q114 — q113's pipeline crashed on the first attempt of batch 2
     * after ALL durable effects, then replayed: the crash cell of the
@@ -2838,7 +2794,8 @@ object StreamGateQueries {
     * oracle verbatim.
     */
   def q114PolicyExpiryCrash(s: SparkSession, dir: String): DataFrame =
-    watermarkFoldGate(s, dir, "q114", failAt = Some(2L), autoCompactOver = Some(2))
+    foldGate(s, dir, "q114", FoldModality.Exact, ExpiryClock.Watermark, failAt = Some(2L),
+      autoCompactOver = Some(2))
 
   /** The watermark-clock WINDOW LAW (q108's scaladoc): slack =
     * D + Hms − (H − 2)·step must sit strictly inside
@@ -2960,118 +2917,6 @@ object StreamGateQueries {
     (src, if (maxRow.isNullAt(0)) None else Some(maxRow.getLong(0)))
   }
 
-  /** Shared harness behind q108 (clean) and q112 (crashed + replayed) —
-    * see q108's scaladoc for the window law and the recorded-watermark
-    * replay discipline.
-    */
-  private def watermarkFoldGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long],
-      autoCompactOver: Option[Int] = None): DataFrame = {
-    import s.implicits._
-    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
-    requireWmWindowLaw(tag)
-    val n = if (failAt.isDefined) 6 else 5
-    val staged = stageDocHashSplit(s, dir, tag, n, eventTs = true)
-    val corpus = Tables.documents(s, dir)
-      .select(
-        graft.operators.TextOps.bagFingerprint(
-          graft.operators.TextOps.normText($"text")).as("fingerprint"),
-        graft.operators.Sampling.uniform01($"doc_id").as("u"))
-      .filter($"u" >= 0.3)
-      .select($"fingerprint")
-    val ix = new graft.operators.StandingIndex(
-      s, s"${tag}_fp_ix", buckets = 4, keys = Seq("fingerprint"))
-    // the corpus ingested one step before batch 0's events — its entries
-    // fall out of the horizon exactly when batch H's threshold passes
-    ix.init(corpus, maxEventMs = WmT0 - WmStepMs)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val qn = s"${tag}_watermark_fold"
-    val sawWm = new java.util.concurrent.atomic.AtomicInteger(0)
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val incoming = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("event_ts", TimestampType))))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-        .select($"doc_id",
-          graft.operators.TextOps.bagFingerprint(
-            graft.operators.TextOps.normText($"text")).as("fingerprint"),
-          $"event_ts")
-        .withWatermark("event_ts", s"${WmDelayMs / 1000} seconds")
-      incoming
-        .writeStream
-        .queryName(s"${qn}_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q113/q114: the cadence POLICY fires the entry-stamped
-          // compact at the head of the batch, bounded to committed
-          // covers (q94's placement discipline) and BEFORE the expire —
-          // under the watermark clock every fold carries a distinct
-          // event-time stamp, so a policy-fired merge is always
-          // mixed-stamp (q106's entry-level machinery) and the expire
-          // right after must still retire exactly the horizon's entries
-          // from the merged generation, here policy-triggered rather
-          // than harness-scheduled
-          autoCompactOver.foreach(k =>
-            policyProbe(tag, ix, k, batchId, policyFired))
-          // the ONE watermark-clock step ([[wmClockStep]]): checkpoint
-          // once, read/record the planning watermark, expire at
-          // committedWatermark − Hms, return the max-event stamp
-          val (src, stampMs) = wmClockStep(s, ck, qn, batchId, ix, batch,
-            onWm = wm => { if (wm > 0L) sawWm.incrementAndGet(); () })
-          stampMs.foreach { batchMaxEventMs =>
-            val admitted = LlmQueries.admitAndFold(
-              src.select($"doc_id", $"fingerprint"), ix, batchId,
-              maxEventMs = batchMaxEventMs)
-            admitted
-              .select($"doc_id", lit(batchId + 1).cast("int").as("batch"),
-                $"fingerprint")
-              .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          }
-          if (failAt.contains(batchId) && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-        }
-        .start()
-    }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.isEmpty,
-      s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state; the watermark operator holds no store), got $stateful")
-    // the engine must actually have reported advancing watermarks — a
-    // silently-absent watermark would leave every expire() a no-op and
-    // collapse this gate into q91's never-expiring shape
-    require(sawWm.get >= n - 2,
-      s"$tag: the engine must report a committed event-time watermark " +
-        s"from batch 2 on, got ${sawWm.get} reports")
-    // q113's non-vacuity fence (q111's): a policy that never fired would
-    // silently degrade the gate to q108 and prove nothing about cadence
-    autoCompactOver.foreach { _ =>
-      require(policyFired.get >= 2,
-        s"$tag: the cadence policy must fire >= 2 compactions across the " +
-          s"run, got ${policyFired.get}")
-    }
-    dropStaged(staged)
-    val result = s.read.parquet(s"$out/batch_*")
-      .select($"doc_id", $"batch", $"fingerprint")
-      .orderBy($"doc_id")
-    // q98's non-vacuity fence: watermark-clocked expiry must have
-    // RE-OPENED at least one corpus-blocked fingerprint
-    val reopened = result.join(corpus, "fingerprint").count()
-    require(reopened > 0,
-      s"$tag must admit at least one post-expiry corpus duplicate, got none")
-    result
-  }
-
   /** Batches the soak gate (q123) drives, and its crash cadence — 50
     * batches with an injected first-attempt crash every 10th batch
     * (batches 10/20/30/40), per the long-horizon deployment shape the
@@ -3146,7 +2991,7 @@ object StreamGateQueries {
     *     knobs, never semantics knobs), with q113's advancing-watermark
     *     and post-expiry re-admission fences on top.
     *
-    * The staging is [[stageDocHashSplit]]'s oracle-pinned hash-group
+    * The staging is [[stageHashSplit]]'s oracle-pinned hash-group
     * layout at n = 50 with `allowEmpty` (a few hundred incoming docs
     * over 50 groups make occasional empty groups a certainty; the file
     * source still delivers them as zero-row batches, so slice i =
@@ -3160,14 +3005,9 @@ object StreamGateQueries {
     val k = 2
     val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
     val sawWm = new java.util.concurrent.atomic.AtomicInteger(0)
-    val staged = stageDocHashSplit(s, dir, tag, n, eventTs = true, allowEmpty = true)
-    val corpus = Tables.documents(s, dir)
-      .select(
-        graft.operators.TextOps.bagFingerprint(
-          graft.operators.TextOps.normText($"text")).as("fingerprint"),
-        graft.operators.Sampling.uniform01($"doc_id").as("u"))
-      .filter($"u" >= 0.3)
-      .select($"fingerprint")
+    val staged = stageHashSplit(s, tag, n, incomingDocs(s, dir), "doc_id",
+      eventTs = true, allowEmpty = true)
+    val corpus = corpusFingerprints(s, dir)
     val ixName = s"${tag}_fp_ix"
     val ix = new graft.operators.StandingIndex(
       s, ixName, buckets = 4, keys = Seq("fingerprint"))
@@ -3192,15 +3032,10 @@ object StreamGateQueries {
       b => s"$tag injected mid-batch failure (first attempt of batch $b)"
     def runOnce(run: String): StreamingQuery = {
       val incoming = s.readStream
-        .schema(StructType(Seq(
-          StructField("doc_id", LongType), StructField("text", StringType),
-          StructField("event_ts", TimestampType))))
+        .schema(StructType(docFields :+ StructField("event_ts", TimestampType)))
         .option("maxFilesPerTrigger", "1")
         .parquet(staged)
-        .select($"doc_id",
-          graft.operators.TextOps.bagFingerprint(
-            graft.operators.TextOps.normText($"text")).as("fingerprint"),
-          $"event_ts")
+        .select($"doc_id", fingerprint($"text").as("fingerprint"), $"event_ts")
         .withWatermark("event_ts", s"${WmDelayMs / 1000} seconds")
       incoming
         .writeStream
@@ -3247,8 +3082,7 @@ object StreamGateQueries {
     // restarts, then a clean termination
     val query = driveCrashSchedule(tag,
       SoakFailAts.map(b => (injectedMsg(b), failMarker(b))))(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
+    val stateful = stateOpNames(query)
     require(stateful.isEmpty,
       s"$tag must run STATELESS (the standing index is the cross-batch " +
         s"state; the watermark operator holds no store), got $stateful")
@@ -3284,43 +3118,6 @@ object StreamGateQueries {
     result
   }
 
-  /** Stage the incoming embeddings (content-hash split `u < 0.5`) as
-    * `n` HASH-GROUP files — vector → micro-batch
-    * `hash60('g' || vec_id) % n` — for the streamed VECTOR fold gates
-    * (q100/q101). [[stageDocHashSplit]]'s layout-pinning argument
-    * applies verbatim: the sequential admission recurrence is
-    * batch-layout-dependent (pairwise cosine similarity is as
-    * non-transitive as Jaccard), so the oracle must reproduce the exact
-    * assignment, which a hash group is and a quantile cut is not. The
-    * incoming share is 0.5, NOT q80's 0.3, deliberately: under the 0.3
-    * split the fixture has ZERO confirmed incoming–incoming pairs at
-    * sf0.001 (measured), so every fold would be inert and the gate
-    * would silently collapse into a streamed q80; at 0.5 the fold path
-    * provably bites at every SF (the [[vectorFoldGate]] fence). Only
-    * (vec_id, embedding) is staged — the sketch (integer scaling, norm,
-    * sign-LSH bucket) is computed IN the stream, map-side, where an
-    * ingest pipeline computes it.
-    */
-  private def stageVecHashSplit(
-      s: SparkSession, dir: String, tag: String, n: Int,
-      eventTs: Boolean = false): String = {
-    import s.implicits._
-    val staged = Files.createTempDirectory(s"graft-$tag-src")
-    val scratch = Files.createTempDirectory(s"graft-$tag-part")
-    val grp = graft.operators.Sampling.hash60(
-      concat(lit("g"), $"vec_id".cast("string"))) % n
-    val base = Tables.embeddings(s, dir)
-      .filter(graft.operators.Sampling.uniform01($"vec_id") < 0.5)
-      .select($"vec_id", $"embedding")
-      .withColumn("_slice", (grp + 1).cast("int"))
-    // eventTs (q117/q118): [[wmEventTs]]'s geometry on the vector
-    // modality — the watermark-window arithmetic stays batch-exact
-    val src = if (!eventTs) base
-      else base.withColumn("event_ts", wmEventTs($"vec_id"))
-    writeSlices(staged, scratch, src, n, filePrefix = "vecs")
-    staged.toString
-  }
-
   /** q100 — the streamed VECTOR fold: q91/q96's continuous-ingest loop
     * on the EMBEDDING modality, completing the streaming × modality
     * matrix (exact fingerprints q91, text near-dup q96, semantic
@@ -3337,7 +3134,7 @@ object StreamGateQueries {
     * rejects vectors semantically duplicating an earlier batch's
     * admission through the INDEX. Layout-pinned oracle as q96:
     * vectors land in micro-batch `hash60('g' || vec_id) % n`
-    * ([[stageVecHashSplit]]) and
+    * ([[stageHashSplit]]) and
     * [[LlmQueries.vectorSequentialOracle]] unrolls the recurrence over
     * exactly those groups.
     *
@@ -3347,7 +3144,7 @@ object StreamGateQueries {
     * cross-batch state).
     */
   def q100StreamingVectorFold(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q100", failAt = None)
+    foldGate(s, dir, "q100", FoldModality.Vector, ExpiryClock.Never, failAt = None)
 
   /** q101 — q100's pipeline crashed on the first attempt of batch 2
     * after both durable effects (admissions dir + sketch-row fold), then
@@ -3359,7 +3156,7 @@ object StreamGateQueries {
     * q100's oracle for the 6-batch layout verbatim.
     */
   def q101VectorFoldCrash(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q101", failAt = Some(2L))
+    foldGate(s, dir, "q101", FoldModality.Vector, ExpiryClock.Never, failAt = Some(2L))
 
   /** q110 — q94's MID-STREAM COMPACTION on the VECTOR modality: q100's
     * continuous sketch-fold loop with the bounded head-of-batch compact
@@ -3371,182 +3168,15 @@ object StreamGateQueries {
     * VERBATIM.
     */
   def q110CompactedVectorFold(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q110", failAt = None, compactAt = Some(1L))
-
-  /** Shared harness behind q100/q101 (never-expiring), q102/q103
-    * (`horizon = Some(H)` — per-batch expire + stamped folds + the
-    * post-expiry re-admission fence), and q110 (`compactAt` — the
-    * bounded head-of-batch mid-stream compaction) — the
-    * `streamingFoldGate(compactAt)` parametrization pattern on the
-    * vector modality.
-    */
-  private def vectorFoldGate(
-      s: SparkSession, dir: String, tag: String, failAt: Option[Long],
-      horizon: Option[Long] = None, compactAt: Option[Long] = None,
-      wmClock: Boolean = false,
-      autoCompactOver: Option[Int] = None): DataFrame = {
-    import s.implicits._
-    require(!(wmClock && horizon.isDefined),
-      s"$tag: wmClock IS the expiry clock — horizon is the batch-position spelling")
-    if (wmClock) requireWmWindowLaw(tag)
-    val policyFired = new java.util.concurrent.atomic.AtomicInteger(0)
-    // the two expiry clocks run the SAME horizon recurrence (the window
-    // law makes the ms clock batch-exact), so the fences and oracle of
-    // the batch-position spelling apply verbatim to the watermark one
-    val fenceHorizon = if (wmClock) Some(ExpiryHorizon) else horizon
-    val n =
-      if (failAt.isDefined) 6 else if (fenceHorizon.isDefined) 5 else 4
-    val staged = stageVecHashSplit(s, dir, tag, n, eventTs = wmClock)
-    val corpusFrame = LlmQueries.vectorIndexRows(
-        LlmQueries.vectorSketch(Tables.embeddings(s, dir))
-          .filter(graft.operators.Sampling.uniform01($"vec_id") >= 0.5))
-      .localCheckpoint() // reused by the non-vacuity fences below
-    val ix = new graft.operators.StandingIndex(
-      s, s"${tag}_vec_ix", buckets = 4, keys = Seq("bucket"))
-    // expiring shape: the corpus folded BEFORE batch 0 — stamp -1 on the
-    // batch-position clock, one full step before batch 0's events on the
-    // watermark clock — so it expires when batch H's threshold passes
-    ix.init(corpusFrame, maxEventMs =
-      if (wmClock) WmT0 - WmStepMs
-      else if (horizon.isDefined) -1L
-      else Long.MaxValue)
-    val out = Files.createTempDirectory(s"graft-$tag-out").toString
-    val ck = Files.createTempDirectory(s"graft-$tag-ck").toString
-    val qn = s"${tag}_vector_fold"
-    val sawWm = new java.util.concurrent.atomic.AtomicInteger(0)
-    val injectedMsg = s"$tag injected mid-batch failure (first attempt of batch ${failAt.getOrElse(-1L)})"
-    val failMarker = Paths.get(out, "_fail_injected")
-    def runOnce(run: String): StreamingQuery = {
-      val fields = Seq(
-        StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType))) ++
-        (if (wmClock) Seq(StructField("event_ts", TimestampType)) else Seq.empty)
-      val read = s.readStream
-        .schema(StructType(fields))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-      val incoming = if (!wmClock) read
-        else read.withWatermark("event_ts", s"${WmDelayMs / 1000} seconds")
-      incoming
-        .writeStream
-        .queryName(s"${qn}_$run")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ck)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // q110: the bounded head-of-batch compact (q94's placement
-          // discipline) — strictly after batch `compactAt`'s commit,
-          // bounded to committed folds
-          if (compactAt.contains(batchId - 1)) ix.compact(coverAtMost = batchId)
-          // q121/q122: the cadence POLICY at the head of the batch —
-          // q113's fully-composed loop on the VECTOR modality (every
-          // firing a mixed-stamp merge under the watermark clock)
-          autoCompactOver.foreach(k =>
-            policyProbe(tag, ix, k, batchId, policyFired))
-          // expiry first (q98's ordering), in either spelling: the
-          // batch-position clock (q102/q103) expires at batchId − H
-          // here; the watermark clock (q117/q118) inside [[wmClockStep]]
-          horizon.foreach(h => ix.expire(expireBeforeMs = batchId - h))
-          val (src, stampMs) =
-            if (wmClock) wmClockStep(s, ck, qn, batchId, ix, batch,
-              onWm = wm => { if (wm > 0L) sawWm.incrementAndGet(); () })
-            else (batch,
-              Some(if (horizon.isDefined) batchId else Long.MaxValue))
-          stampMs.foreach { stamp =>
-            // then the ONE per-batch spelling (LlmQueries
-            // .vectorAdmitAndFold, shared with StreamBench's vecfold
-            // subject): sketch once, probe strictly-earlier surviving
-            // segments, fold the admitted sketch rows (the sketch is
-            // deterministic per vector, so the crash replay's re-fold
-            // is byte-identical)
-            val admitted = LlmQueries.vectorAdmitAndFold(
-              src.select($"vec_id", $"embedding"), ix, batchId,
-              maxEventMs = stamp)
-            admitted
-              .select($"vec_id", lit(batchId + 1).cast("int").as("batch"),
-                $"bucket")
-              .write.mode("overwrite").parquet(f"$out/batch_$batchId%06d")
-          }
-          if (failAt.contains(batchId) && !Files.exists(failMarker)) {
-            Files.createFile(failMarker)
-            throw new RuntimeException(injectedMsg)
-          }
-          ()
-        }
-        .start()
-    }
-    val query = driveRuns(tag, failAt, injectedMsg, failMarker)(runOnce)
-    val stateful = Option(query.lastProgress)
-      .map(_.stateOperators.map(_.operatorName).toSeq).getOrElse(Seq.empty)
-    require(stateful.isEmpty,
-      s"$tag must run STATELESS (the standing index is the cross-batch " +
-        s"state; the watermark operator holds no store), got $stateful")
-    // q108's fence: silently-absent watermarks would no-op every expire
-    if (wmClock) require(sawWm.get >= n - 2,
-      s"$tag: the engine must report a committed event-time watermark " +
-        s"from batch 2 on, got ${sawWm.get} reports")
-    // q121/q122's non-vacuity fence (q111's): a policy that never fired
-    // would silently degrade the gate to q117 and prove nothing
-    autoCompactOver.foreach { _ =>
-      require(policyFired.get >= 2,
-        s"$tag: the cadence policy must fire >= 2 compactions across the " +
-          s"run, got ${policyFired.get}")
-    }
-    dropStaged(staged)
-    val result = s.read.parquet(s"$out/batch_*")
-      .select($"vec_id", $"batch", $"bucket")
-      .orderBy($"vec_id")
-    if (fenceHorizon.isEmpty) {
-      // non-vacuity fence (never-expiring shape): at least one rejection
-      // must be attributable to a FOLD (an earlier batch's admission),
-      // not the corpus or the in-batch self-join — otherwise the gate
-      // silently collapses into a streamed q80 and proves nothing about
-      // index maintenance. The no-fold baseline replays each batch's
-      // admission against the corpus segment ALONE; strictly more
-      // admissions there means a fold blocked somebody here.
-      val grpCol = (graft.operators.Sampling.hash60(
-        concat(lit("g"), $"vec_id".cast("string"))) % n + 1).cast("int")
-      val stagedSv = LlmQueries.vectorSketch(Tables.embeddings(s, dir)
-          .filter(graft.operators.Sampling.uniform01($"vec_id") < 0.5))
-        .withColumn("g", grpCol).localCheckpoint()
-      val noFold = (1 to n).map { k =>
-        LlmQueries.admitByVectorSegments(
-          stagedSv.filter($"g" === k).drop("g"), Seq(corpusFrame)).count()
-      }.sum
-      val admittedCount = result.count()
-      require(noFold > admittedCount,
-        s"$tag: folds must block at least one vector " +
-          s"(no-fold admissions $noFold vs admitted $admittedCount)")
-    }
-    fenceHorizon.foreach { h =>
-      // non-vacuity fence (expiring shape): expiry must have RE-OPENED
-      // at least one corpus-blocked vector — an admission in a batch
-      // past the horizon whose confirmed corpus near-duplicate would
-      // have rejected it under the never-expiring gate; otherwise the
-      // expiring gate silently collapses into q100
-      val lateSv = LlmQueries.vectorSketch(Tables.embeddings(s, dir))
-        .join(result.filter($"batch" > h).select($"vec_id"), "vec_id")
-      val reopened = lateSv.join(corpusFrame, "bucket")
-        .withColumn("cosine", graft.operators.VectorOps.cosineFromParts(
-          graft.operators.VectorOps.dotL($"v", $"bv"), $"nsq", $"bn"))
-        .filter($"cosine" >= 0.4)
-        .select($"vec_id").distinct().count()
-      require(reopened > 0,
-        s"$tag must admit at least one post-expiry corpus near-duplicate, got none")
-    }
-    result
-  }
+    foldGate(s, dir, "q110", FoldModality.Vector, ExpiryClock.Never, failAt = None,
+      compactAt = Some(1L))
 
   /** q100/q101's oracle: the sequential vector-admission recurrence
     * unrolled over the gate's exact hash-group batch layout. With
     * `horizon` set, q102/q103's expiring variant of the same generator.
     */
-  private def vectorGateOracle(n: Int, horizon: Option[Long] = None): String = {
-    val u = graft.operators.Sampling.duckUniform01("CAST(vec_id AS VARCHAR)")
-    val gh = graft.operators.Sampling.duckHash60("'g' || CAST(vec_id AS VARCHAR)")
-    LlmQueries.vectorSequentialOracle(
-      s"CASE WHEN $u >= 0.5 THEN 0 ELSE 1 + ($gh % $n) END", n, horizon)
-  }
+  private def vectorGateOracle(n: Int, horizon: Option[Long] = None): String =
+    LlmQueries.vectorSequentialOracle(duckBatchGroup("vec_id", 0.5, n), n, horizon)
 
   /** q102 — streamed EXPIRING dedup on the VECTOR modality: q98's
     * horizon recurrence run through q100's pipeline, completing the
@@ -3570,7 +3200,7 @@ object StreamGateQueries {
     * windowed blocker arms.
     */
   def q102ExpiringVectorFold(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q102", failAt = None, horizon = Some(ExpiryHorizon))
+    foldGate(s, dir, "q102", FoldModality.Vector, ExpiryClock.BatchPosition, failAt = None)
 
   /** q103 — q102's pipeline crashed on the first attempt of batch 2
     * after its durable effects (expire + fold + sink), then replayed:
@@ -3582,7 +3212,7 @@ object StreamGateQueries {
     * expiry on the vector modality.
     */
   def q103ExpiringVectorCrash(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q103", failAt = Some(2L), horizon = Some(ExpiryHorizon))
+    foldGate(s, dir, "q103", FoldModality.Vector, ExpiryClock.BatchPosition, failAt = Some(2L))
 
   /** q117 — q102's expiring VECTOR fold under the production watermark
     * clock (q115's twin on the embedding modality, completing the
@@ -3598,7 +3228,7 @@ object StreamGateQueries {
     * watermarks and ≥ 1 post-expiry corpus near-dup re-admission.
     */
   def q117WatermarkVectorFold(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q117", failAt = None, wmClock = true)
+    foldGate(s, dir, "q117", FoldModality.Vector, ExpiryClock.Watermark, failAt = None)
 
   /** q118 — q117's pipeline crashed on the first attempt of batch 2
     * after ALL durable effects, then replayed: q112's recovery
@@ -3610,7 +3240,7 @@ object StreamGateQueries {
     * max-event stamp.
     */
   def q118WatermarkVectorCrash(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q118", failAt = Some(2L), wmClock = true)
+    foldGate(s, dir, "q118", FoldModality.Vector, ExpiryClock.Watermark, failAt = Some(2L))
 
   /** q121 — q113's fully-composed production loop on the VECTOR
     * modality (q119's twin, completing the composition × modality
@@ -3622,7 +3252,7 @@ object StreamGateQueries {
     * merged generations, q117's oracle VERBATIM plus q111's fences.
     */
   def q121PolicyVectorFold(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q121", failAt = None, wmClock = true,
+    foldGate(s, dir, "q121", FoldModality.Vector, ExpiryClock.Watermark, failAt = None,
       autoCompactOver = Some(2))
 
   /** q122 — q121's batch-2 crash after all durable effects, replayed:
@@ -3632,7 +3262,7 @@ object StreamGateQueries {
     * (the sketch is deterministic per vector).
     */
   def q122PolicyVectorCrash(s: SparkSession, dir: String): DataFrame =
-    vectorFoldGate(s, dir, "q122", failAt = Some(2L), wmClock = true,
+    foldGate(s, dir, "q122", FoldModality.Vector, ExpiryClock.Watermark, failAt = Some(2L),
       autoCompactOver = Some(2))
 
 
